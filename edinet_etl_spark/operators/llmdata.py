@@ -1244,7 +1244,7 @@ def _bpe_learn_merges(spark: SparkSession, docs: DataFrame) -> list[tuple]:
             # silently build a '·None··None·' replace literal (old
             # pre-fold behavior raised IndexError here).  Fail loud.
             raise ValueError(
-                f"bpe_train_steps: no symbol pairs left at round {r} "
+                f"_bpe_learn_merges: no symbol pairs left at round {r} "
                 f"(corpus exhausted before _BPE_ROUNDS={_BPE_ROUNDS})"
             )
         merges.append((top["a"], top["b"], top["cnt"]))
@@ -2024,7 +2024,12 @@ def skipgram_training_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Zipf-bounded like the BPE vocab).  Negatives join the
     top pairs against the broadcast 500-row vocabulary by hashed rank;
     the modulus is the vocabulary's OWN count, so the query is correct
-    even on corpora with fewer distinct tokens."""
+    even on corpora with fewer distinct tokens.
+
+    Precondition: ``doc_id`` is unique (the ``documents`` key).  Pairs
+    are built within one row, while the DuckDB oracle self-joins on
+    ``doc_id``; rows sharing a ``doc_id`` would be cross-paired there
+    and not here."""
     prep(spark)
     # Co-occurrence WITHOUT the corpus self-join: the whole (center,
     # context) pair list of a document is built in-row from the word

@@ -1,12 +1,16 @@
 """End-to-end EDINET ETL on Spark (SURVEY.md §3 lifecycle).
 
 The reference's five eager stages (``/root/reference/main.py:13-40``)
-become two Spark jobs:
+become one lazy plan with three Python islands, fired by the sink's
+persisted empty probe and its write (9 Spark jobs with AQE on):
 
-1. **Ingestion** (UDF islands, executor-side HTTP): company master →
-   date range → list fetch → semi-join filter → download → unzip.
-2. **Analytics** (one Catalyst plan): best-filing dedup → parse →
-   year decode → dimension join → final table → CSV sink.
+1. **Ingestion** (executor-side HTTP): company master → date range →
+   list island → semi-join filter → download island, which also
+   unzips and keeps the target member (A2/F7/F8).
+2. **Analytics**: best-filing dedup (the one hash shuffle) → parse
+   island for both formats, per-file P7/P8/L2 included → fiscal-year
+   cast → year decode → broadcast dimension join → final table → CSV
+   sink.
 
 Injection of ``Fetcher`` keeps every test offline (FIXTURES.md §B).
 """
@@ -18,14 +22,15 @@ from pyspark.sql import DataFrame, SparkSession
 from edinet_etl_spark.pipeline.config import PipelineConfig
 from edinet_etl_spark.pipeline.load import load_to_csv
 from edinet_etl_spark.pipeline.transform import process_financial_documents
-from edinet_etl_spark.sources import company_master, edinet_api, zip_extract
+from edinet_etl_spark.sources import company_master, edinet_api
 from edinet_etl_spark.sources.edinet_api import Fetcher, RetryPolicy
 
 
 def ingest_filings(
     spark: SparkSession, cfg: PipelineConfig, fetcher: Fetcher
 ) -> tuple[DataFrame, DataFrame]:
-    """Stages 1-4 (``main.py:15-28``): returns (companies, filings)."""
+    """Stages 1-4 (``main.py:15-28``): returns (companies, filings);
+    the download island already yields one filing per usable ZIP."""
     companies = company_master.extract_companies(spark, cfg.csv_file)
     dates = edinet_api.date_range(spark, cfg.start_date, cfg.end_date)
     policy = RetryPolicy(
@@ -37,7 +42,7 @@ def ingest_filings(
         dates, fetcher, policy, num_partitions=cfg.fetch_partitions
     )
     targeted = edinet_api.filter_documents(docs, companies, cfg.target_doc_types)
-    downloads = edinet_api.download_documents(
+    filings = edinet_api.download_documents(
         targeted,
         fetcher,
         companies_to_get=cfg.companies_to_get,
@@ -49,7 +54,7 @@ def ingest_filings(
         ),
         num_partitions=cfg.fetch_partitions,
     )
-    return companies, zip_extract.extract_filings(downloads)
+    return companies, filings
 
 
 def run_pipeline(

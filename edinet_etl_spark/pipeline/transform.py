@@ -8,11 +8,15 @@ with the company dimension, emit
 ``[year, companyname, industryclassification, geonameen, revenue,
 revenue_unit]``.
 
-Spark-first shape: the per-file Python loop disappears.  Parsing is a
-minimal ``mapInPandas`` island (bytes → positional rows); *everything
-else* — the head-5 limit, the dynamic revenue mask, the fiscal-year
-extract, the year decode, cast-skip, the dimension join — is
-declarative, so one Catalyst plan covers all files at once.
+Spark-first shape: one Catalyst plan covers all files at once with
+ONE Python island.  The A1 dedup is a window over ``company_code`` (the
+plan's only hash shuffle).  Both formats then parse in a single
+``mapInPandas`` pass (:func:`parse_filings`): each file sits whole in
+one call, so the per-file rules — CSV row-1 mask (P7), DEI rows (P8),
+head-5 (L2), the XBRL marker scan — run next to the decode instead of
+as per-file window shuffles.  The CSV fiscal-year cast, the year decode
+(a literal ``map`` lookup), cast-skip and the broadcast dimension join
+stay declarative.
 """
 
 from __future__ import annotations
@@ -34,19 +38,25 @@ YEAR_OFFSETS = {
     "Prior4YearDuration": -4,
 }
 
-FACT_SCHEMA = (
-    "filename string, arrival_idx long, row_pos long, "
-    "element_id string, context_ref string, value string, unit_ref string"
+# CSV DEI element carrying the fiscal year end (src/transform.py:99-102).
+_DEI_FISCAL = "jpdei_cor:CurrentFiscalYearEndDateDEI"
+
+# Parse-island output: one row per revenue fact.  XBRL rows carry the
+# fiscal year; CSV rows carry the file's DEI values instead, so the
+# year is cast by Spark exactly as before (see parse_filings).
+_PARSED_SCHEMA = (
+    "filename string, arrival_idx long, context_ref string, value string, "
+    "unit_ref string, fiscal_year int, dei_values array<string>"
 )
 
-_FACT_COLS = [
+_PARSED_COLS = [
     "filename",
     "arrival_idx",
-    "row_pos",
-    "element_id",
     "context_ref",
     "value",
     "unit_ref",
+    "fiscal_year",
+    "dei_values",
 ]
 
 
@@ -74,169 +84,141 @@ def select_best_filings(filings: DataFrame) -> DataFrame:
     )
 
 
-def parse_filing_csv(filings: DataFrame) -> DataFrame:
-    """S5+P7 prep: decode UTF-16 tab-separated filing bytes into
-    positional rows.  Only the *decode* happens in Python; the
-    reference's row-1 mask (P7), DEI extract (P8) and head-5 (L2) are
-    applied relationally in :func:`csv_revenue_facts`."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    df = pd.read_csv(
-                        io.BytesIO(r.member_bytes), sep="\t", encoding="utf-16"
-                    )
-                except Exception:  # noqa: BLE001 — unparseable filing → skip
-                    continue
-                for pos, row in enumerate(df.itertuples(index=False)):
-                    vals = dict(zip(df.columns, row))
-                    rows.append(
-                        (
-                            r.filename,
-                            r.arrival_idx,
-                            pos,
-                            str(vals.get("要素ID", "")),
-                            str(vals.get("コンテキストID", "")),
-                            None if pd.isna(vals.get("値")) else str(vals.get("値")),
-                            None
-                            if pd.isna(vals.get("ユニットID"))
-                            else str(vals.get("ユニットID")),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=_FACT_COLS)
-
-    return filings.filter(F.col("file_type") == "csv").mapInPandas(
-        parse, schema=FACT_SCHEMA
-    )
-
-
-def csv_revenue_facts(parsed: DataFrame) -> DataFrame:
-    """P7/P8/L2 on the positional rows, all declarative:
+def csv_facts(member_bytes: bytes) -> tuple[list, list] | None:
+    """S5/P7/P8/L2 for one UTF-16 tab-separated filing: returns
+    (facts, DEI values) or ``None`` when it does not parse.
 
     - revenue mask = ``要素ID`` at positional row 1 (pandas
-      ``df.loc[1]``, ``src/transform.py:94``) — a per-file dynamic
-      value, expressed as a window max over ``row_pos == 1``;
-    - fiscal year = year of the DEI row's value (``:99-102``);
-    - first 5 mask rows in file order (``:98``).
-    """
-    w = Window.partitionBy("filename")
-    mask = F.max(F.when(F.col("row_pos") == 1, F.col("element_id"))).over(w)
-    fiscal = F.max(
-        F.when(
-            F.col("element_id") == "jpdei_cor:CurrentFiscalYearEndDateDEI",
-            F.year(F.to_date(F.col("value"))),
+      ``df.loc[1]``, ``src/transform.py:94``); fewer than 2 rows → no
+      mask, no facts;
+    - facts = the first 5 rows carrying the mask, in file order
+      (``:98``), as (context_ref, value, unit_ref);
+    - DEI values = the ``値`` of every fiscal-year DEI row (``:99-102``),
+      left as strings for the caller's year cast."""
+    try:
+        df = pd.read_csv(io.BytesIO(member_bytes), sep="\t", encoding="utf-16")
+    except Exception:  # noqa: BLE001 — unparseable filing → skip
+        return None
+
+    def cell(vals: dict, col: str) -> str | None:
+        v = vals.get(col)
+        return None if pd.isna(v) else str(v)
+
+    rows = []
+    for row in df.itertuples(index=False):
+        vals = dict(zip(df.columns, row))
+        rows.append(
+            (
+                str(vals.get("要素ID", "")),
+                str(vals.get("コンテキストID", "")),
+                cell(vals, "値"),
+                cell(vals, "ユニットID"),
+            )
         )
-    ).over(w)
-    wn = Window.partitionBy("filename").orderBy("row_pos")
-    return (
-        parsed.withColumn("revenue_mask", mask)
-        .withColumn("fiscal_year", fiscal)
-        .filter(F.col("element_id") == F.col("revenue_mask"))
-        .withColumn("rev_rn", F.row_number().over(wn))
-        .filter(F.col("rev_rn") <= 5)
-        .filter(F.col("fiscal_year").isNotNull())  # no DEI row → skip file
-        .select(
-            "filename",
-            "arrival_idx",
-            "context_ref",
-            "value",
-            "unit_ref",
-            "fiscal_year",
-        )
-    )
+    mask = rows[1][0] if len(rows) > 1 else None
+    facts = [r[1:] for r in rows if r[0] == mask][:5]
+    dei = [r[2] for r in rows if r[0] == _DEI_FISCAL]
+    return facts, dei
 
 
-def parse_filing_xbrl(filings: DataFrame) -> DataFrame:
-    """X1 UDTF (``src/transform.py:11-74``): fiscal year from the first
-    parseable ``CurrentPeriodEndDateDEI``; revenue rows = the 5
-    elements after the first ``NumberOfSubmissionDEI`` marker that
-    carry a contextRef and text; ``unitRef`` defaults to 'JPY' (F13).
+def xbrl_facts(member_bytes: bytes) -> tuple[list, int] | None:
+    """X1 for one XBRL instance (``src/transform.py:11-74``): returns
+    (facts, fiscal year) or ``None`` when it does not parse or has no
+    fiscal year.  Fiscal year from the first parseable
+    ``CurrentPeriodEndDateDEI``; facts = the 5 elements after the first
+    ``NumberOfSubmissionDEI`` marker that carry a contextRef and text;
+    ``unitRef`` defaults to 'JPY' (F13).
 
     Fixes the reference's unbound-``fiscal_year`` bug (SURVEY §2.11a):
     a file with no parseable fiscal date emits nothing instead of
     raising NameError."""
+    try:
+        root = ET.fromstring(member_bytes)
+    except Exception:  # noqa: BLE001 — malformed XML → skip
+        return None
+    elements = list(root.iter())
+    fiscal_year = None
+    for elem in elements:
+        if elem.tag.endswith("CurrentPeriodEndDateDEI") and elem.text:
+            try:
+                fiscal_year = pd.to_datetime(elem.text).year
+                break
+            except Exception:  # noqa: BLE001 — keep scanning
+                continue
+    if fiscal_year is None:
+        return None
+    facts = []
+    for i, elem in enumerate(elements):
+        if "NumberOfSubmissionDEI" in elem.tag:
+            for rev in elements[i + 1 : i + 6]:
+                ctx = rev.get("contextRef")
+                if ctx and rev.text:
+                    facts.append((ctx, rev.text, rev.get("unitRef", "JPY")))
+            break
+    return facts, fiscal_year
+
+
+def parse_filings(filings: DataFrame) -> DataFrame:
+    """P12 format dispatch in ONE ``mapInPandas`` island: every filing
+    sits whole in one call, so the per-file rules (CSV row-1 mask, DEI
+    rows, head-5; the XBRL marker scan) run in Python next to the
+    decode, with no per-file window shuffle and no union of branches.
+
+    Output: (filename, arrival_idx, context_ref, value, unit_ref,
+    fiscal_year).  The CSV fiscal year stays Spark's
+    ``max(year(to_date(value)))`` over the DEI rows — the island ships
+    the raw DEI strings and ``array_max(transform(...))`` casts them, so
+    the date-cast semantics are the engine's, not Python's.  Files with
+    no fiscal year emit nothing."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                try:
-                    root = ET.fromstring(r.member_bytes)
-                except Exception:  # noqa: BLE001 — malformed XML → skip
+                if r.file_type == "csv":
+                    parsed = csv_facts(r.member_bytes)
+                    if parsed is None:
+                        continue
+                    facts, dei = parsed
+                    tail = (None, dei)
+                elif r.file_type == "xbrl":
+                    parsed = xbrl_facts(r.member_bytes)
+                    if parsed is None:
+                        continue
+                    facts, fiscal_year = parsed
+                    tail = (fiscal_year, None)
+                else:
                     continue
-                elements = list(root.iter())
-                fiscal_year = None
-                for elem in elements:
-                    if elem.tag.endswith("CurrentPeriodEndDateDEI") and elem.text:
-                        try:
-                            fiscal_year = pd.to_datetime(elem.text).year
-                            break
-                        except Exception:  # noqa: BLE001 — keep scanning
-                            continue
-                if fiscal_year is None:
-                    continue
-                for i, elem in enumerate(elements):
-                    if "NumberOfSubmissionDEI" in elem.tag:
-                        for j in range(1, 6):
-                            if i + j < len(elements):
-                                rev = elements[i + j]
-                                ctx = rev.get("contextRef")
-                                if ctx and rev.text:
-                                    rows.append(
-                                        (
-                                            r.filename,
-                                            r.arrival_idx,
-                                            fiscal_year,
-                                            ctx,
-                                            rev.text,
-                                            rev.get("unitRef", "JPY"),
-                                        )
-                                    )
-                        break
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "filename",
-                    "arrival_idx",
-                    "fiscal_year",
-                    "context_ref",
-                    "value",
-                    "unit_ref",
-                ],
-            )
+                rows.extend((r.filename, r.arrival_idx) + f + tail for f in facts)
+            yield pd.DataFrame(rows, columns=_PARSED_COLS)
 
-    return filings.filter(F.col("file_type") == "xbrl").mapInPandas(
-        parse,
-        schema=(
-            "filename string, arrival_idx long, fiscal_year int, "
-            "context_ref string, value string, unit_ref string"
-        ),
+    csv_year = F.array_max(
+        F.transform("dei_values", lambda v: F.year(F.to_date(v)))
+    )
+    return (
+        filings.select("filename", "arrival_idx", "file_type", "member_bytes")
+        .mapInPandas(parse, schema=_PARSED_SCHEMA)
+        .withColumn("fiscal_year", F.coalesce("fiscal_year", csv_year))
+        .filter(F.col("fiscal_year").isNotNull())  # no DEI row → skip file
+        .drop("dei_values")
     )
 
 
-def revenue_facts(filings: DataFrame) -> DataFrame:
-    """P12 format dispatch: CSV and XBRL branches, unioned into one
-    fact stream of (filename, fiscal_year, context_ref, value,
-    unit_ref)."""
-    csv_facts = csv_revenue_facts(parse_filing_csv(filings))
-    xbrl_facts = parse_filing_xbrl(filings).select(
-        "filename", "arrival_idx", "context_ref", "value", "unit_ref", "fiscal_year"
-    )
-    return csv_facts.unionByName(xbrl_facts)
+def parse_filing_xbrl(filings: DataFrame) -> DataFrame:
+    """The XBRL half of :func:`parse_filings` (X1, see
+    :func:`xbrl_facts`)."""
+    return parse_filings(filings.filter(F.col("file_type") == "xbrl"))
 
 
 def decode_and_enrich(facts: DataFrame, companies: DataFrame) -> DataFrame:
     """J3+P11 year decode, P10 cast-skip, F13 unit default, J1
     broadcast company join, final schema (``src/transform.py:187-213``).
 
-    The 5-key year map is a literal broadcast-joined DataFrame —
-    unknown contexts drop out of the inner join exactly like the
-    reference's ``year_mapping.get(...) is None: continue``."""
-    spark = facts.sparkSession
-    offsets = spark.createDataFrame(
-        list(YEAR_OFFSETS.items()), "context_ref string, year_offset int"
+    The 5-key year map is a literal ``map`` lookup — unknown contexts
+    get a null offset and drop out, exactly like the reference's
+    ``year_mapping.get(...) is None: continue``."""
+    offsets = F.create_map(
+        *[F.lit(x) for kv in YEAR_OFFSETS.items() for x in kv]
     )
     dim = companies.select(
         F.col("EDINET Code").alias("company_code"),
@@ -246,7 +228,8 @@ def decode_and_enrich(facts: DataFrame, companies: DataFrame) -> DataFrame:
     code = F.split(F.col("filename"), "_")[0]  # F5 (src/transform.py:161)
     return (
         facts.withColumn("company_code", code)
-        .join(F.broadcast(offsets), "context_ref", "inner")  # J3 + P11
+        .withColumn("year_offset", offsets[F.col("context_ref")])  # J3
+        .filter(F.col("year_offset").isNotNull())  # P11
         .withColumn("revenue", F.col("value").try_cast("long"))  # F10
         .filter(F.col("revenue").isNotNull())  # P10
         .join(F.broadcast(dim), "company_code", "inner")  # J1 + P9
@@ -263,5 +246,5 @@ def decode_and_enrich(facts: DataFrame, companies: DataFrame) -> DataFrame:
 
 def process_financial_documents(filings: DataFrame, companies: DataFrame) -> DataFrame:
     """The reference's ``process_financial_documents`` as one lazy
-    plan: A1 best-filing dedup → parse → decode → enrich."""
-    return decode_and_enrich(revenue_facts(select_best_filings(filings)), companies)
+    plan: A1 best-filing dedup → parse island → decode → enrich."""
+    return decode_and_enrich(parse_filings(select_best_filings(filings)), companies)

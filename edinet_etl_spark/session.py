@@ -19,7 +19,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Fall back to the cores this process may run on, not a fixed width:
+# local[N] and the shuffle-partition count both follow it.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "edinet_etl_spark", cpus: str | int | None = None) -> SparkSession:

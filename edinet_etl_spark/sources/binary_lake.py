@@ -11,10 +11,11 @@ rows with the same scan machinery as any other file source —
 partition-parallel reads, pathGlobFilter pushdown, and no bytes read
 for pruned files when only metadata columns are selected.
 
-Downstream is IDENTICAL to the HTTP path: filename-encoded metadata is
-parsed relationally (F5/F6-style regexes), then the same ZIP UDTF +
-largest-member selection (`zip_extract`) feeds the parsers — one code
-path for members regardless of how bytes arrived.
+Downstream matches the HTTP path: filename-encoded metadata is parsed
+relationally (F5/F6-style regexes), then `zip_extract.extract_filings`
+applies the same per-ZIP row helpers the download island uses
+(largest-member selection + canonical filename) and feeds the parsers
+— one member rule regardless of how bytes arrived.
 """
 
 from __future__ import annotations
@@ -41,8 +42,7 @@ _DT_RE = r"dt=(\d{4}-\d{2}-\d{2})"
 def read_filing_lake(spark: SparkSession, lake_dir: str) -> DataFrame:
     """Scan a directory tree of filing ZIPs into the same
     (docID, edinetCode, docTypeCode, submitDateTime, file_type,
-    arrival_idx, content) shape `download_documents` produces, so
-    `zip_extract.explode_zip_members` composes unchanged.
+    arrival_idx, content) shape `zip_extract.extract_filings` takes.
 
     file_type comes from the fileType component the same way the flag
     dispatch does (P13): type 5 payloads carry CSV members, type 1

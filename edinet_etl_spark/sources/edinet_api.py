@@ -11,10 +11,12 @@ Reference behavior (``/root/reference/src/extract.py``):
 - per-doc download dispatched by csvFlag/xbrlFlag (``:173-186``).
 
 Spark-first shape: the date range is a DataFrame
-(``explode(sequence(...))`` — F2), HTTP happens inside a
-``mapInPandas`` island (the only executor-boundary crossing, SURVEY
-§3), and everything around it — JSON decoding, semi-join, flag
-dispatch, limit — is declarative so Catalyst can optimize it.
+(``explode(sequence(...))`` — F2), HTTP happens inside two
+``mapInPandas`` islands — the list fetch, and the download that also
+unzips and picks the filing member (the only executor-boundary
+crossings, SURVEY §3) — and everything around them — JSON decoding,
+semi-join, flag dispatch, limit — is declarative so Catalyst can
+optimize it.
 
 The HTTP client is injected (``Fetcher``) so tests run entirely
 offline against recorded fixtures; ``HttpFetcher`` (stdlib urllib) is
@@ -35,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from edinet_etl_spark.sources import zip_extract
 
 # Metadata fields consumed downstream (src/extract.py:158,173-186;
 # src/utils/helper.py:82-85).  Booleans are the API's string flags.
@@ -205,8 +209,10 @@ def filter_documents(
 ) -> DataFrame:
     """P6/J2: keep docs whose edinetCode is a target company (left-semi
     against the broadcast master — the reference's hash-set membership,
-    ``src/extract.py:149-162``) and whose docTypeCode is targeted."""
-    codes = companies.select(F.col("EDINET Code").alias("edinetCode")).distinct()
+    ``src/extract.py:149-162``) and whose docTypeCode is targeted.  The
+    build side is not de-duplicated: a semi join emits each probe row
+    at most once whatever the key multiplicity."""
+    codes = companies.select(F.col("EDINET Code").alias("edinetCode"))
     return docs.join(F.broadcast(codes), "edinetCode", "left_semi").filter(
         F.col("docTypeCode").isin(doc_types)
     )
@@ -246,9 +252,16 @@ def download_documents(
     policy: RetryPolicy | None = None,
     num_partitions: int = 8,
 ) -> DataFrame:
-    """S3: head-N in arrival order (L1, ``src/extract.py:204-205``)
-    then per-doc ZIP fetch.  Output: doc metadata + ``content`` binary.
-    Failed downloads emit nothing (reference swallows after retries)."""
+    """S3+S4: head-N in arrival order (L1, ``src/extract.py:204-205``),
+    then one island that fetches each ZIP and keeps only its target
+    member (A2) under the canonical filename (F7/F8), via the
+    ``zip_extract`` row helpers.  Output: the filings shape
+    ``zip_extract.FILING_SCHEMA`` (doc metadata + ``filename``,
+    ``member_bytes``).  Failed downloads, corrupt ZIPs and ZIPs with no
+    target member emit nothing (the reference swallows after retries
+    and logs-and-skips bad archives).  Fetch and unzip share the pass,
+    so a ZIP never crosses the Python/JVM boundary and no member
+    selection shuffle is needed."""
     policy = policy or RetryPolicy(jitter_base=0.5)
     per_partition_rate = policy.requests_per_second / max(num_partitions, 1)
 
@@ -259,36 +272,18 @@ def download_documents(
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         limiter = _PartitionLimiter(per_partition_rate)
         for pdf in batches:
-            out = {c: [] for c in OUT_COLS}
+            rows = []
             for row in pdf.itertuples(index=False):
                 raw = _with_retries(
                     lambda r=row: fetcher.fetch_document(r.docID, r.api_type),
                     policy,
                     limiter,
                 )
-                if raw is None:
-                    continue
-                out["docID"].append(row.docID)
-                out["edinetCode"].append(row.edinetCode)
-                out["docTypeCode"].append(row.docTypeCode)
-                out["submitDateTime"].append(row.submitDateTime)
-                out["file_type"].append(row.file_type)
-                out["arrival_idx"].append(row.arrival_idx)
-                out["content"].append(raw)
-            yield pd.DataFrame(out)
+                filing = None if raw is None else zip_extract.filing_row(row, raw)
+                if filing is not None:
+                    rows.append(filing)
+            yield pd.DataFrame(rows, columns=zip_extract.FILING_COLS)
 
-    OUT_COLS = [
-        "docID",
-        "edinetCode",
-        "docTypeCode",
-        "submitDateTime",
-        "file_type",
-        "arrival_idx",
-        "content",
-    ]
-    schema = (
-        "docID string, edinetCode string, docTypeCode string, "
-        "submitDateTime string, file_type string, arrival_idx long, "
-        "content binary"
+    return docs.repartition(num_partitions).mapInPandas(
+        fetch, schema=zip_extract.FILING_SCHEMA
     )
-    return docs.repartition(num_partitions).mapInPandas(fetch, schema=schema)

@@ -262,3 +262,26 @@ class FlakyFetcher(FixtureFetcher):
     def fetch_document(self, doc_id: str, file_type: str) -> bytes:
         self._maybe_fail(f"doc:{doc_id}")
         return super().fetch_document(doc_id, file_type)
+
+
+class CountingFetcher(FixtureFetcher):
+    """Serves the fixtures and appends one ``list:<date>`` or
+    ``doc:<docID>`` line per call to ``log_path``.  Every worker process
+    appends to the same file, so a test can count how often each fetch
+    really ran across the whole job."""
+
+    def __init__(self, root: str, log_path: str):
+        super().__init__(root)
+        self.log_path = str(log_path)
+
+    def _log(self, key: str) -> None:
+        with open(self.log_path, "a") as f:  # one short O_APPEND write
+            f.write(key + "\n")
+
+    def fetch_list(self, date_str: str) -> bytes:
+        self._log(f"list:{date_str}")
+        return super().fetch_list(date_str)
+
+    def fetch_document(self, doc_id: str, file_type: str) -> bytes:
+        self._log(f"doc:{doc_id}")
+        return super().fetch_document(doc_id, file_type)

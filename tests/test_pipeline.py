@@ -6,10 +6,16 @@ unit tests for each reference-specific semantic: A1 130-beats-120
 dedup (with the last-130 / first-non-130 tie rules), A2 largest
 member, P10 cast skip, P11 unknown-context skip, L2 head-5, F13 unit
 default, the fixed unbound-fiscal-year XBRL behavior (§2.11a), ZIP
-error paths, empty-input sink guard, and retry swallow semantics.
+error paths, empty-input sink guard, and retry swallow semantics —
+plus the ETL's static plan shape and a fetch-once check over a full
+run.
 """
 
 from __future__ import annotations
+
+import collections
+import dataclasses
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,18 +24,24 @@ from edinet_etl_spark.pipeline.config import PipelineConfig
 from edinet_etl_spark.pipeline.etl import ingest_filings, run_pipeline
 from edinet_etl_spark.pipeline.load import load_to_csv
 from edinet_etl_spark.pipeline.transform import (
+    csv_facts,
     parse_filing_xbrl,
+    parse_filings,
     process_financial_documents,
     select_best_filings,
 )
 from edinet_etl_spark.sources import company_master, edinet_api
 from edinet_etl_spark.sources.edinet_api import RetryPolicy, _PartitionLimiter, _with_retries
+from edinet_etl_spark.sources.zip_extract import best_member, filing_name
 from tests.fixtures.gen import (
     GOLDEN,
     XBRL_NO_FISCAL,
     XBRL_VALID,
+    CountingFetcher,
     FixtureFetcher,
     FlakyFetcher,
+    _filing_csv_bytes,
+    _zip_bytes,
     build_all,
 )
 
@@ -272,13 +284,13 @@ def test_observed_metrics_multi_partition(spark, tmp_path):
 
 def test_binary_lake_ingestion(spark, tmp_path):
     """S3's pre-fetched-directory mapping: ZIPs landed on storage by an
-    upstream collector, read via the `binaryFile` source, explode
-    through the SAME ZIP UDTF as the HTTP path, members intact."""
+    upstream collector, read via the `binaryFile` source, then reduced
+    to filings by the SAME per-ZIP member rule as the HTTP path."""
     import io
     import zipfile
 
     from edinet_etl_spark.sources.binary_lake import read_filing_lake
-    from edinet_etl_spark.sources.zip_extract import explode_zip_members
+    from edinet_etl_spark.sources.zip_extract import extract_filings
 
     lake = tmp_path / "lake" / "dt=2024-06-01"
     lake.mkdir(parents=True)
@@ -313,11 +325,147 @@ def test_binary_lake_ingestion(spark, tmp_path):
     assert rows["broken"]["docTypeCode"] is None
     assert rows["broken"]["file_type"] == "xbrl"
 
-    members = explode_zip_members(filings).collect()
-    got = {(m["docID"], m["member_name"]): m["member_size"] for m in members}
-    # corrupt zip skipped; real members exploded with true sizes
-    assert got == {
-        ("D001", "a/main.csv"): 10,
-        ("D001", "a/side.csv"): 99,
-        ("D002", "b/report.xbrl"): 7,
+    got = {
+        r["docID"]: (r["filename"], bytes(r["member_bytes"]))
+        for r in extract_filings(filings).collect()
     }
+    # corrupt zip skipped; the largest target member wins (A2), named
+    # from the lake metadata (F7/F8)
+    assert got == {
+        "D001": ("E00001_20240601_120.csv", b"y" * 99),
+        "D002": ("E00002_20240601_130.xbrl", b"<xbrl/>"),
+    }
+
+
+# ------------------------------------------------------ plan shape
+def _plan_nodes(df) -> collections.Counter:
+    """Physical node names of ``df``'s executed plan; an ``Exchange``
+    is named with its partitioning, e.g. ``Exchange hashpartitioning``."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    names = collections.Counter()
+    for line in plan.splitlines():
+        m = re.match(r"^[\s:+\-]*(?:\*\(\d+\)\s*)?(\w+)(?:\s+(\w+))?", line)
+        if m:
+            name = m.group(1)
+            names[f"{name} {m.group(2)}" if name == "Exchange" else name] += 1
+    return names
+
+
+def test_etl_plan_shape(spark, fixture_root, cfg):
+    """The static (AQE-off) ETL plan keeps only the stages the semantics
+    need: three Python islands (list, download+unzip, parse), one hash
+    shuffle (the A1 ``company_code`` dedup), two broadcasts (target-code
+    semi join, dimension join), two windows (arrival index, A1) and no
+    union of per-format branches."""
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        companies, filings = ingest_filings(spark, cfg, FixtureFetcher(fixture_root))
+        nodes = _plan_nodes(process_financial_documents(filings, companies))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert nodes["MapInPandas"] <= 3, nodes
+    assert nodes["Exchange hashpartitioning"] <= 1, nodes
+    assert nodes["BroadcastExchange"] <= 2, nodes
+    assert nodes["Window"] <= 2, nodes
+    assert nodes["Union"] == 0, nodes
+
+
+def test_run_pipeline_fetches_each_doc_once(spark, fixture_root, cfg, tmp_path):
+    """A full run — persist, empty probe, write — fetches every list
+    date and every dispatched doc exactly once: no action re-runs the
+    fetch islands.  The cap exercises the ordered-limit path: arrival
+    order D001, D002, D003, (D006 has no flag), D007, D009 → the first
+    four dispatched docs."""
+    log = tmp_path / "fetches.log"
+    capped = dataclasses.replace(cfg, output_dir=str(tmp_path / "out"), companies_to_get=4)
+    assert run_pipeline(spark, capped, CountingFetcher(fixture_root, log)) is not None
+    calls = collections.Counter(log.read_text().split())
+    assert calls == {
+        **{f"list:2024-06-0{d}": 1 for d in range(1, 5)},
+        **{f"doc:{d}": 1 for d in ("D001", "D002", "D003", "D007")},
+    }
+
+
+# ------------------------------------------ per-file rules in Python
+_REV = "jpcrp_cor:Revenue"
+_DEI = "jpdei_cor:CurrentFiscalYearEndDateDEI"
+
+
+def test_csv_facts_needs_a_mask_row():
+    """P7: the mask is row 1; a filing with fewer than 2 data rows has
+    none and yields no facts, even when its only row is the mask
+    element."""
+    facts, dei = csv_facts(_filing_csv_bytes([[_DEI, "FilingDateInstant", "2024-03-31", None]]))
+    assert facts == [] and dei == ["2024-03-31"]
+    facts, _ = csv_facts(_filing_csv_bytes([[_REV, "CurrentYearDuration", "1", "JPY"]]))
+    assert facts == []
+    assert csv_facts(b"garbage") is None  # undecodable → skip file
+
+
+def test_csv_facts_keeps_first_five_mask_rows():
+    """L2: only the first five mask rows, in file order, survive."""
+    rows = [["jpdei_cor:EDINETCodeDEI", "FilingDateInstant", "E00001", None]]
+    rows += [[_REV, f"Ctx{i}", str(i), "JPY"] for i in range(7)]
+    facts, _ = csv_facts(_filing_csv_bytes(rows))
+    assert facts == [(f"Ctx{i}", str(i), "JPY") for i in range(5)]
+
+
+def test_parse_filings_csv_fiscal_year_is_latest_dei(spark):
+    """P8: with two DEI rows the later year wins in either file order
+    (Spark's max over ``year(to_date(value))``); a one-row filing emits
+    nothing."""
+
+    def filing(dei_dates):
+        rows = [
+            ["jpdei_cor:EDINETCodeDEI", "FilingDateInstant", "E00001", None],
+            [_REV, "CurrentYearDuration", "1000", "JPY"],
+        ]
+        rows += [[_DEI, "FilingDateInstant", d, None] for d in dei_dates]
+        return bytearray(_filing_csv_bytes(rows))
+
+    df = spark.createDataFrame(
+        [
+            ("E00001_20240601_120.csv", 1, "csv", filing(["2023-03-31", "2024-03-31"])),
+            ("E00002_20240601_120.csv", 2, "csv", filing(["2024-03-31", "2023-03-31"])),
+            ("E00003_20240601_120.csv", 3, "csv", bytearray(
+                _filing_csv_bytes([[_REV, "CurrentYearDuration", "5", "JPY"]]))),
+        ],
+        "filename string, arrival_idx long, file_type string, member_bytes binary",
+    )
+    got = {r["filename"]: r["fiscal_year"] for r in parse_filings(df).collect()}
+    assert got == {"E00001_20240601_120.csv": 2024, "E00002_20240601_120.csv": 2024}
+
+
+def test_filing_name_matches_concat_ws(spark):
+    """F7/F8: the Python filename equals the Spark ``concat_ws`` +
+    ``concat`` spelling it replaced, null parts included."""
+    inputs = [
+        ("E00001", "2024-06-01 09:00", "120", "csv"),
+        ("E00001", None, "120", "csv"),
+        ("E00001", "2024-06-01", None, "xbrl"),
+        (None, "2024-6-1 9:00", "130", "xbrl"),
+        ("E00001", "", "120", "csv"),
+        ("E00001", "2024-06-01 09:00", "120", None),
+    ]
+    df = spark.createDataFrame(
+        inputs, "edinetCode string, submitDateTime string, docTypeCode string, file_type string"
+    )
+    date_str = F.regexp_replace(F.substring_index(F.col("submitDateTime"), " ", 1), "-", "")
+    stem = F.concat_ws("_", F.col("edinetCode"), date_str, F.col("docTypeCode"))
+    spark_names = [
+        r[0] for r in df.select(F.concat(stem, F.lit("."), F.col("file_type"))).collect()
+    ]
+    assert [filing_name(*i) for i in inputs] == spark_names
+    assert filing_name("E00001", None, "120", "csv") == "E00001_120.csv"
+
+
+def test_best_member_ties_break_on_name():
+    """A2: equal sizes pick the greatest name whatever the archive
+    order; the extension must match the file type; corrupt → None."""
+    for order in (["a.xbrl", "c.xbrl", "b.xbrl"], ["c.xbrl", "b.xbrl", "a.xbrl"]):
+        content = _zip_bytes({n: n.encode() * 10 for n in order})
+        assert best_member(content, "xbrl") == b"c.xbrl" * 10
+        assert best_member(content, "csv") is None
+    content = _zip_bytes({"big.txt": b"x" * 99, "small.csv": b"y", "dir/a.csv": b"zz"})
+    assert best_member(content, "csv") == b"zz"
+    assert best_member(b"PK\x03\x04corrupt", "csv") is None
